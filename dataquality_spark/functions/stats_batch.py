@@ -55,11 +55,6 @@ _SYM_LUT[list(_SYM_BYTES)] = True
 _FASTGATE_BAD = np.zeros(256, dtype=np.bool_)
 _FASTGATE_BAD[0x80:] = True
 _FASTGATE_BAD[0x1C:0x20] = True
-# A/B kill switch: reject every row (the JVM regex forms then decide all
-# rows, exactly the pre-fast-path plan). Read at import in each worker.
-import os as _os
-if _os.environ.get("SPARK_GRAFT_NO_STATS_FASTPATH"):
-    _FASTGATE_BAD[:] = True
 
 
 # The fast branch works on the row's raw BYTES (sliced straight off the
@@ -153,7 +148,7 @@ def stats_batch(texts) -> dict[str, np.ndarray]:
         "nb_distinct": np.zeros(n, dtype=np.int64),
         "fast": np.ones(n, dtype=np.bool_),
         "letterless": np.zeros(n, dtype=np.int64),
-        "stop_cnts": np.zeros((n, len(_KEYMAT)), dtype=np.int64),
+        "stop_cnts": np.zeros((n, _KEYMAT.shape[1]), dtype=np.int64),
     }
     if n == 0:
         return out

@@ -299,6 +299,9 @@ def _seg_sums(gathered: np.ndarray, seg_len: np.ndarray) -> np.ndarray:
 def portable_scores_batch(texts, art: dict
                           ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(pred, margin, n_features) per text — the batched portable scorer.
+    pred = argmax_l score(doc, l), ties broken by LOWEST lang index (the
+    SQL mirror orders `score DESC, li ASC`); margin = best − runner-up.
+    Texts with no features → (−1, 0) → NULL pred on both engines.
     Pure integer arithmetic, so the batch vectorization is EXACT by
     construction (sums are order-invariant): one shared codepoint buffer,
     one h2/h3 hash pass, per-language gather + prefix-sum segment sums."""
@@ -328,19 +331,6 @@ def portable_scores_batch(texts, art: dict
     return pred, margin, n_f
 
 
-def predict_portable_batch(texts: pd.Series, art: dict
-                           ) -> tuple[np.ndarray, np.ndarray]:
-    """(pred lang index, integer margin) per text under the portable spec.
-    pred = argmax_l score(doc, l), ties broken by LOWEST lang index (the
-    SQL mirror orders `score DESC, li ASC`); margin = best − runner-up
-    (0 when fewer than two languages, impossible here). Texts with no
-    features → (−1, 0) → NULL pred on both engines. Batched via
-    ``portable_scores_batch`` (integer sums — exact in any order)."""
-    vals = texts.to_numpy(dtype=object) if hasattr(texts, "to_numpy") else texts
-    pred, margin, _ = portable_scores_batch(list(vals), art)
-    return pred, margin
-
-
 def make_portable_langid_udf(spark, art: dict):
     """Arrow-batched UDF → struct(pred_idx int, margin long): the portable
     integer decision surface (broadcast quantized artifact, no per-row
@@ -351,7 +341,8 @@ def make_portable_langid_udf(spark, art: dict):
 
     @F.pandas_udf("struct<pred_idx: int, margin: long>")
     def portable_langid(text: pd.Series) -> pd.DataFrame:
-        pred, margin = predict_portable_batch(text, b_art.value)
+        pred, margin, _ = portable_scores_batch(
+            list(text.to_numpy(object)), b_art.value)
         return pd.DataFrame({"pred_idx": pred.astype(np.int32),
                              "margin": margin})
 

@@ -243,19 +243,6 @@ def predict_batch(texts: pd.Series, art: dict) -> np.ndarray:
     return probs
 
 
-def make_quality_udf(spark, art: dict):
-    """Double-returning Arrow-batched UDF with the broadcast artifact."""
-    from pyspark.sql import functions as F
-
-    b_art = spark.sparkContext.broadcast(art)
-
-    @F.pandas_udf("double")
-    def quality_prob(text: pd.Series) -> pd.Series:
-        return pd.Series(predict_batch(text, b_art.value))
-
-    return quality_prob
-
-
 # --- quantized portable artifact (exact-oracle scoring) ---------------------
 
 ARTIFACT_PATH = _os.path.join(_os.path.dirname(_os.path.abspath(__file__)),

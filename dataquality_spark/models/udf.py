@@ -1,13 +1,16 @@
-"""The single model-scoring pandas UDF: langid + perplexity in one pass.
+"""Pipeline stage B: ONE fused model stage for both model stacks.
 
-One struct-returning Arrow-batched UDF per the plan in SURVEY.md §4.4
-("keep UDF count per stage minimal: one struct-returning UDF for
-langid+perplexity"). Model artifacts are broadcast once via
-``SparkContext.broadcast``; each task unpacks numpy tables from the broadcast,
-never re-pickling driver globals per batch.
+SURVEY.md §4.4: one struct-returning Arrow UDF per stage, so `text` crosses
+the JVM↔Python boundary once. ``with_model_stage`` builds it around a
+``Scorer`` — ``float_scorer`` (langid + trigram logprob, optional quality
+classifier) or ``portable_scorer`` (fixed-point, SQL-replayable) — plus the
+sparse scrub and the batched text stats. Artifacts are broadcast once via
+``SparkContext.broadcast``; tasks never re-pickle driver globals per batch.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -16,15 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataquality_spark import spec
-from dataquality_spark.models import langid as L
-from dataquality_spark.models import ngram_lm as LM
-
-SCORE_SCHEMA = T.StructType([
-    T.StructField("pred_lang", T.StringType()),
-    T.StructField("lang_conf", T.DoubleType()),
-    T.StructField("logprob", T.DoubleType()),
-    T.StructField("lp_ok", T.BooleanType()),
-])
+from dataquality_spark.functions.stats_batch import stats_batch
+from dataquality_spark.models import langid as L, ngram_lm as LM, quality
+from dataquality_spark.scrub import scrub_series_sparse
 
 
 def score_batch(texts: pd.Series, langid_art: dict, lm_art: dict) -> pd.DataFrame:
@@ -36,40 +33,32 @@ def score_batch(texts: pd.Series, langid_art: dict, lm_art: dict) -> pd.DataFram
     langs = np.array(langid_art["langs"] + [None], dtype=object)
     pred_lang = langs[pred_ix]  # -1 → None
     lo, hi = lm_art["lo"], lm_art["hi"]
-    ok = np.zeros(len(texts), dtype=object)
+    ok = np.zeros(len(texts), dtype=bool)
     valid = (pred_ix >= 0) & ~np.isnan(lp)
-    ok[:] = False
     ok[valid] = (lp[valid] >= lo[pred_ix[valid]]) & (lp[valid] <= hi[pred_ix[valid]])
-    return pd.DataFrame({
-        "pred_lang": pred_lang,
-        "lang_conf": conf,
-        "logprob": lp,
-        "lp_ok": ok.astype(bool),
-    })
+    return pd.DataFrame({"pred_lang": pred_lang, "lang_conf": conf,
+                         "logprob": lp, "lp_ok": ok})
 
 
-def make_score_udf(spark: SparkSession, langid_art: dict, lm_art: dict):
-    """Struct-returning pandas UDF with broadcast artifacts."""
-    sc = spark.sparkContext
-    b_langid = sc.broadcast(langid_art)
-    b_lm = sc.broadcast(lm_art)
-
-    @F.pandas_udf(SCORE_SCHEMA)
-    def score(text: pd.Series) -> pd.DataFrame:
-        return score_batch(text, b_langid.value, b_lm.value)
-
-    # nondeterministic ⇒ Catalyst must not duplicate the call when the four
-    # struct fields are extracted (measured: 4× re-evaluation otherwise); the
-    # UDF is pure, this only constrains plan rewrites
-    return score.asNondeterministic()
+class Scorer(NamedTuple):
+    """One model stack, as ``with_model_stage`` consumes it."""
+    fields: list[T.StructField]   # the stack's own struct fields
+    arts: dict[str, dict]         # artifacts with_model_stage broadcasts
+    # (text, {name: artifact}) → frame of ``fields``; module-level, so the
+    # UDF pickles it by reference
+    kernel: Callable[[pd.Series, dict], pd.DataFrame]
+    # JVM projection → r_lang_match, r_perplexity (+ r_quality)
+    rules: Callable[[DataFrame], DataFrame]
 
 
-FUSED_SCHEMA = T.StructType(
-    SCORE_SCHEMA.fields + [T.StructField("scrubbed_text", T.StringType())]
+# every stage struct ends with the sparse scrub (NULL = unchanged; the JVM
+# coalesces — halves the Arrow return traffic) and the stats_batch counts
+# that let the rules projection skip per-row JVM text passes (the gated
+# ones are NULL where the ASCII gate rejects the row)
+SHARED_FIELDS = (
+    [T.StructField("scrubbed_text", T.StringType())]
     + [T.StructField(f, T.LongType()) for f in
        ("word_cnt", "nonws_len", "symbol_cnt", "nb_lines", "nb_distinct")]
-    # gated fast-path stats (functions/stats_batch): NULL on rows the
-    # ASCII gate rejects — the JVM regex forms decide those via coalesce
     + [T.StructField("letterless", T.LongType()),
        T.StructField("stop_cnts", T.ArrayType(T.IntegerType()))])
 
@@ -77,7 +66,6 @@ FUSED_SCHEMA = T.StructType(
 def _emit_stats(out: pd.DataFrame, text: pd.Series) -> pd.DataFrame:
     """Append stats_batch columns to a fused-UDF result frame, turning the
     gated stats NULL wherever the row failed the ASCII fast-path gate."""
-    from dataquality_spark.functions.stats_batch import stats_batch
     st = stats_batch(text)
     fast = st.pop("fast")
     ll = st.pop("letterless").astype(object)
@@ -90,115 +78,83 @@ def _emit_stats(out: pd.DataFrame, text: pd.Series) -> pd.DataFrame:
     return out
 
 
-def make_score_scrub_udf(spark: SparkSession, langid_art: dict, lm_art: dict,
-                         quality_art: dict | None = None):
-    """Fused langid+perplexity+scrub UDF: ONE Arrow transfer of the text
-    column instead of two (each ArrowEvalPython node ships `text` JVM→Python
-    independently; fusing measured 11.4s→9.8s for the UDF stages at
-    sf0.1/local[32]). Pure composition of the shared kernels
-    (``score_batch`` + ``scrub_series``) — parity tests on each kernel
-    cover the fused path. When ``quality_art`` is given, the learned quality
-    classifier (models/quality.py) rides the SAME Arrow crossing as one more
-    struct field instead of a second Python runner."""
-    from dataquality_spark.scrub import scrub_series_sparse
-    sc = spark.sparkContext
-    b_langid = sc.broadcast(langid_art)
-    b_lm = sc.broadcast(lm_art)
-    b_q = sc.broadcast(quality_art) if quality_art is not None else None
-    schema = FUSED_SCHEMA
-    if b_q is not None:
-        schema = T.StructType(FUSED_SCHEMA.fields
-                              + [T.StructField("q_prob", T.DoubleType())])
+def with_model_stage(spark: SparkSession, df: DataFrame,
+                     scorer: Scorer) -> DataFrame:
+    """Append the scorer's columns + rule flags, ``scrubbed_text`` and the
+    precomputed text stats of ``text``, all from ONE Python runner (fusing
+    the model and scrub UDFs measured 11.4s→9.8s for the UDF stages at
+    sf0.1/local[32]: each ArrowEvalPython node ships `text` on its own)."""
+    bcast = {k: spark.sparkContext.broadcast(a) for k, a in scorer.arts.items()}
+    kernel = scorer.kernel  # the closure must not capture scorer.arts
+    schema = T.StructType(scorer.fields + SHARED_FIELDS)
 
+    # perfbench/ledger.py finds the stage's Python runner by this name
     @F.pandas_udf(schema)
     def score_scrub(text: pd.Series) -> pd.DataFrame:
-        out = score_batch(text, b_langid.value, b_lm.value)
-        # sparse scrub: unchanged rows return None and the JVM coalesces
-        # with the original column — halves the Arrow return traffic
-        # (scrub.scrub_series_sparse; byte-identical after coalesce)
+        out = kernel(text, {k: b.value for k, b in bcast.items()})
         out["scrubbed_text"] = scrub_series_sparse(text)
-        # fixed-ASCII-class text stats + the gated fast-path stats ride
-        # the same Arrow crossing (functions/stats_batch: bit-identical
-        # to the JVM forms) so the downstream rules projection skips the
-        # per-row JVM text passes wherever the gate admits the row
-        out = _emit_stats(out, text)
-        if b_q is not None:
-            from dataquality_spark.models import quality
-            out["q_prob"] = quality.predict_batch(text, b_q.value)
-        return out
+        return _emit_stats(out, text)
 
-    return score_scrub.asNondeterministic()
+    # nondeterministic: Catalyst may not duplicate or move the call when the
+    # fields are extracted (the UDF is pure). Plans show ONE ArrowEvalPython
+    # node per stage (tests/test_portable_models.py); that a deterministic
+    # mark would re-evaluate is unmeasured, and dropping it changes the plan.
+    udf = score_scrub.asNondeterministic()
+    out = (df.withColumn("_m", udf(F.col("text")))
+           .select("*", *(f"_m.{f}" for f in schema.fieldNames()))
+           .drop("_m")
+           .withColumn("scrubbed_text",
+                       F.coalesce(F.col("scrubbed_text"), F.col("text"))))
+    return scorer.rules(out)
 
 
-def with_model_scores_and_scrub(spark: SparkSession, df: DataFrame,
-                                langid_art: dict, lm_art: dict,
-                                text_col: str = "text",
-                                lang_col: str = "lang",
-                                quality_art: dict | None = None,
-                                lang_optional: bool = False) -> DataFrame:
-    """Fused pipeline stage: same columns as ``with_model_scores`` plus
-    ``scrubbed_text`` (and, with ``quality_art``, ``q_prob`` +
-    ``r_quality``), in a single Python runner.
+# --- float stack (production default) ---------------------------------------
+
+def _float_kernel(text: pd.Series, arts: dict) -> pd.DataFrame:
+    out = score_batch(text, arts["langid"], arts["lm"])
+    if "quality" in arts:
+        out["q_prob"] = quality.predict_batch(text, arts["quality"])
+    return out
+
+
+def float_scorer(langid_art: dict, lm_art: dict,
+                 quality_art: dict | None = None,
+                 lang_optional: bool = False) -> Scorer:
+    """pred_lang / lang_conf / logprob → r_lang_match + r_perplexity. With
+    ``quality_art`` the learned quality classifier (models/quality.py)
+    rides the same crossing as ``q_prob`` → ``r_quality``.
 
     ``lang_optional=True`` is the raw-crawl mode: pages straight from WARC
     carry no claimed language, so a NULL ``lang`` passes the language rule
     whenever the model is confident (the claimed-vs-predicted agreement
     check only applies where a claim exists)."""
-    udf = make_score_scrub_udf(spark, langid_art, lm_art,
-                               quality_art=quality_art)
-    df = df.withColumn("_m", udf(F.col(text_col)))
-    fields = ["_m.pred_lang", "_m.lang_conf", "_m.logprob",
-              "_m.lp_ok", "_m.scrubbed_text", "_m.word_cnt",
-              "_m.nonws_len", "_m.symbol_cnt", "_m.nb_lines",
-              "_m.nb_distinct", "_m.letterless", "_m.stop_cnts"]
+    arts = {"langid": langid_art, "lm": lm_art}
+    fields = [T.StructField("pred_lang", T.StringType()),
+              T.StructField("lang_conf", T.DoubleType()),
+              T.StructField("logprob", T.DoubleType()),
+              T.StructField("lp_ok", T.BooleanType())]
     if quality_art is not None:
-        fields.append("_m.q_prob")
-    agree = F.col("pred_lang") == F.col(lang_col)
-    if lang_optional:
-        agree = F.col(lang_col).isNull() | agree
-    out = (
-        df.select("*", *fields)
-        .drop("_m")
-        .withColumn("scrubbed_text",
-                    F.coalesce(F.col("scrubbed_text"), F.col(text_col)))
-        .withColumn(
-            "r_lang_match",
-            F.col("pred_lang").isNotNull()
-            & agree
-            & (F.col("lang_conf") >= spec.MIN_LANGID_CONF),
-        )
-        .withColumn("r_perplexity", F.col("lp_ok"))
-        .drop("lp_ok")
-    )
-    if quality_art is not None:
-        out = out.withColumn(
-            "r_quality", F.col("q_prob") >= spec.MIN_QUALITY_PROB)
-    return out
+        arts["quality"] = quality_art
+        fields.append(T.StructField("q_prob", T.DoubleType()))
+
+    def rules(df: DataFrame) -> DataFrame:
+        agree = F.col("pred_lang") == F.col("lang")
+        if lang_optional:
+            agree = F.col("lang").isNull() | agree
+        out = (df.withColumn("r_lang_match",
+                             F.col("pred_lang").isNotNull() & agree
+                             & (F.col("lang_conf") >= spec.MIN_LANGID_CONF))
+               .withColumn("r_perplexity", F.col("lp_ok"))
+               .drop("lp_ok"))
+        if quality_art is not None:
+            out = out.withColumn(
+                "r_quality", F.col("q_prob") >= spec.MIN_QUALITY_PROB)
+        return out
+
+    return Scorer(fields, arts, _float_kernel, rules)
 
 
-def with_model_scores(spark: SparkSession, df: DataFrame,
-                      langid_art: dict, lm_art: dict,
-                      text_col: str = "text", lang_col: str = "lang"
-                      ) -> DataFrame:
-    """Append pred_lang/lang_conf/logprob + the two model rule flags
-    (r_lang_match, r_perplexity). No shuffle — one Python runner stage."""
-    udf = make_score_udf(spark, langid_art, lm_art)
-    df = df.withColumn("_m", udf(F.col(text_col)))
-    return (
-        df.select("*", "_m.pred_lang", "_m.lang_conf", "_m.logprob", "_m.lp_ok")
-        .drop("_m")
-        .withColumn(
-            "r_lang_match",
-            F.col("pred_lang").isNotNull()
-            & (F.col("pred_lang") == F.col(lang_col))
-            & (F.col("lang_conf") >= spec.MIN_LANGID_CONF),
-        )
-        .withColumn("r_perplexity", F.col("lp_ok"))
-        .drop("lp_ok")
-    )
-
-
-# --- ENGINE-PORTABLE model stage (exact-oracle pipeline path) ---------------
+# --- ENGINE-PORTABLE stack (exact-oracle pipeline path) ---------------------
 
 # r_lang_match margin floor, in L_QSCALE units PER FEATURE: the portable
 # analogue of MIN_LANGID_CONF (a softmax level has no integer mirror; a
@@ -207,102 +163,53 @@ def with_model_scores(spark: SparkSession, df: DataFrame,
 # derive the rule from it.
 L_MARGIN_PER_FEAT = 10_000
 
-PORTABLE_SCHEMA = T.StructType([
-    T.StructField("pred_idx", T.IntegerType()),
-    T.StructField("lg_n", T.IntegerType()),      # langid feature count
-    T.StructField("margin", T.LongType()),       # best − runner-up, int64
-    T.StructField("lm_n", T.IntegerType()),      # trigram count
-    T.StructField("lm_num", T.LongType()),       # Σ quantized logprob terms
-    T.StructField("scrubbed_text", T.StringType()),
-] + [T.StructField(f, T.LongType()) for f in
-     ("word_cnt", "nonws_len", "symbol_cnt", "nb_lines", "nb_distinct")]
-  + [T.StructField("letterless", T.LongType()),
-     T.StructField("stop_cnts", T.ArrayType(T.IntegerType()))])
+
+def _portable_kernel(text: pd.Series, arts: dict) -> pd.DataFrame:
+    pred, margin, lg_n = L.portable_scores_batch(
+        list(text.to_numpy(object)), arts["langid"])
+    lm_n, lm_num = LM.lm_score_portable_batch(text.tolist(), pred, arts["lm"])
+    return pd.DataFrame({"pred_idx": pred.astype(np.int32),
+                         "lg_n": lg_n.astype(np.int32), "margin": margin,
+                         "lm_n": lm_n.astype(np.int32), "lm_num": lm_num})
 
 
-def make_portable_score_scrub_udf(spark: SparkSession, plang_art: dict,
-                                  plm_art: dict):
-    """Fused PORTABLE langid+LM+scrub UDF: the fixed-point integer surfaces
-    (models/langid.py § portable, models/ngram_lm.py § portable) plus the
-    byte-exact scrub, one Arrow crossing — same fusion contract as
-    ``make_score_scrub_udf``."""
-    from dataquality_spark.models import langid as L
-    from dataquality_spark.models import ngram_lm as LM
-    from dataquality_spark.scrub import scrub_series_sparse
-    sc = spark.sparkContext
-    b_lg = sc.broadcast(plang_art)
-    b_lm = sc.broadcast(plm_art)
-
-    @F.pandas_udf(PORTABLE_SCHEMA)
-    def portable_score_scrub(text: pd.Series) -> pd.DataFrame:
-        # one batched scorer call yields pred + margin + feature count
-        # (the old per-row portable_lang_buckets pass for lg_n is free now)
-        pred, margin, lg_n = L.portable_scores_batch(
-            list(text.to_numpy(object)), b_lg.value)
-        lm_n, lm_num = LM.lm_score_portable_batch(
-            text.tolist(), pred, b_lm.value)
-        out = pd.DataFrame({
-            "pred_idx": pred.astype(np.int32),
-            "lg_n": lg_n.astype(np.int32),
-            "margin": margin,
-            "lm_n": lm_n.astype(np.int32),
-            "lm_num": lm_num,
-            # sparse scrub (see make_score_scrub_udf): JVM coalesces
-            "scrubbed_text": scrub_series_sparse(text),
-        })
-        # fixed-ASCII-class text stats + gated fast-path stats on the
-        # same crossing (bit-identical to the JVM forms — stats_batch)
-        return _emit_stats(out, text)
-
-    return portable_score_scrub.asNondeterministic()
-
-
-def with_portable_scores_and_scrub(spark: SparkSession, df: DataFrame,
-                                   text_col: str = "text",
-                                   lang_col: str = "lang") -> DataFrame:
-    """PORTABLE stage-B: same r_lang_match / r_perplexity / scrubbed_text
-    contract as ``with_model_scores_and_scrub``, but every decision is pure
-    integer arithmetic — SQL-replayable, which is what makes the full
+def portable_scorer() -> Scorer:
+    """The fixed-point integer surfaces (models/langid.py § portable,
+    models/ngram_lm.py § portable): every decision is pure integer
+    arithmetic — SQL-replayable, which is what makes the full
     pipeline-metrics query exact-oracle. The rules:
 
       r_lang_match  = pred == claimed AND margin ≥ lg_n·L_MARGIN_PER_FEAT
       r_perplexity  = lm_n > 0 AND lo_q[pred]·lm_n ≤ lm_num ≤ hi_q[pred]·lm_n
     """
-    from dataquality_spark.models import langid as L
-    from dataquality_spark.models import ngram_lm as LM
-    plang = L.get_portable_langid()
-    plm = LM.get_portable_lm()
-    udf = make_portable_score_scrub_udf(spark, plang, plm)
-    df = df.withColumn("_m", udf(F.col(text_col)))
-    lang_arr = F.array(*[F.lit(c) for c in plang["langs"]])
-    lo_arr = F.array(*[F.lit(int(v)) for v in plm["lo_q"].tolist()])
-    hi_arr = F.array(*[F.lit(int(v)) for v in plm["hi_q"].tolist()])
-    pred_ok = F.col("_m.pred_idx") >= 0
-    pred_lang = F.when(pred_ok,
-                       F.element_at(lang_arr, F.col("_m.pred_idx") + 1))
-    lo_b = F.when(pred_ok, F.element_at(lo_arr, F.col("_m.pred_idx") + 1))
-    hi_b = F.when(pred_ok, F.element_at(hi_arr, F.col("_m.pred_idx") + 1))
-    return (
-        df.select("*", "_m.margin", "_m.lg_n", "_m.lm_n", "_m.lm_num",
-                  "_m.scrubbed_text", "_m.word_cnt", "_m.nonws_len",
-                  "_m.symbol_cnt", "_m.nb_lines", "_m.nb_distinct",
-                  "_m.letterless", "_m.stop_cnts")
-        .withColumn("scrubbed_text",
-                    F.coalesce(F.col("scrubbed_text"), F.col(text_col)))
-        .withColumn("pred_lang", pred_lang)
-        .withColumn(
-            "r_lang_match",
-            F.coalesce(
-                pred_ok & (F.col("pred_lang") == F.col(lang_col))
+    plang, plm = L.get_portable_langid(), LM.get_portable_lm()
+    fields = [T.StructField("pred_idx", T.IntegerType()),
+              T.StructField("lg_n", T.IntegerType()),   # langid feature count
+              T.StructField("margin", T.LongType()),    # best − runner-up
+              T.StructField("lm_n", T.IntegerType()),   # trigram count
+              T.StructField("lm_num", T.LongType())]    # Σ quantized terms
+    pred_ok = F.col("pred_idx") >= 0
+
+    def per_lang(values: list) -> Column:
+        arr = F.array(*[F.lit(v) for v in values])
+        return F.when(pred_ok, F.element_at(arr, F.col("pred_idx") + 1))
+
+    lo_b, hi_b = per_lang(plm["lo_q"].tolist()), per_lang(plm["hi_q"].tolist())
+    lm_n = F.col("lm_n").cast("long")
+
+    def rules(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("pred_lang", per_lang(plang["langs"]))
+            .withColumn("r_lang_match", F.coalesce(
+                pred_ok & (F.col("pred_lang") == F.col("lang"))
                 & (F.col("margin")
                    >= F.col("lg_n").cast("long") * F.lit(L_MARGIN_PER_FEAT)),
                 F.lit(False)))
-        .withColumn(
-            "r_perplexity",
-            F.coalesce(
+            .withColumn("r_perplexity", F.coalesce(
                 pred_ok & (F.col("lm_n") > 0)
-                & (F.col("lm_num") >= lo_b * F.col("lm_n").cast("long"))
-                & (F.col("lm_num") <= hi_b * F.col("lm_n").cast("long")),
+                & (F.col("lm_num") >= lo_b * lm_n)
+                & (F.col("lm_num") <= hi_b * lm_n),
                 F.lit(False)))
-        .drop("_m")
-    )
+            .drop("pred_idx"))
+
+    return Scorer(fields, {"langid": plang, "lm": plm}, _portable_kernel, rules)

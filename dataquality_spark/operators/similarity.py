@@ -51,8 +51,7 @@ ANN_MAX_QUERIES = 100_000
 # OOM). Probed with ONE bounded limit-collect over the already-persisted
 # signature frame, the same idiom as COSINE_ALLPAIRS_MAX_ROWS, except the
 # overflow here FALLS BACK instead of raising (both paths are exact).
-EMB_VERIFY_LOOKUP_MAX_ROWS = int(
-    __import__("os").environ.get("SPARK_GRAFT_EMB_LOOKUP_MAX", "200000"))
+EMB_VERIFY_LOOKUP_MAX_ROWS = 200_000
 
 
 def _collect_queries(queries: DataFrame, id_col: str, vec_col: str

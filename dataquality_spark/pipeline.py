@@ -1,14 +1,13 @@
 """The full quality-pipeline DAG (SURVEY.md §3.4).
 
     pages ──► Stage A/C: text stats + heuristic rule flags   [native exprs, no shuffle]
-          ──► Stage B:   langid + perplexity                 [one Arrow UDF, no shuffle]
-          ──► Stage D:   scrub                               [one Arrow UDF, no shuffle]
+          ──► Stage B+D: langid + perplexity + scrub         [one fused Arrow UDF, no shuffle]
           ──► Stage E:   exact dedup among surviving docs    [1 salted shuffle + join-back]
           ──► decisions(url, keep, rules, scores, scrubbed_text)
           ──► rule_metrics (one agg pass)                    [tiny]
 
 Single engineered shuffle (Stage E). Everything upstream fuses into one
-whole-stage-codegen span + two Python runners. Column pruning means `html`
+whole-stage-codegen span + one Python runner. Column pruning means `html`
 is never deserialized unless the caller selects it (SURVEY.md §4.2).
 """
 
@@ -19,7 +18,8 @@ from pyspark.sql import functions as F
 
 from dataquality_spark import spec
 from dataquality_spark.models import langid, ngram_lm
-from dataquality_spark.models.udf import with_model_scores_and_scrub
+from dataquality_spark.models.udf import (float_scorer, portable_scorer,
+                                          with_model_stage)
 from dataquality_spark.rules.heuristics import rule_metrics, with_rule_flags
 
 PIPELINE_RULES = spec.ALL_RULES + ["dedup"]
@@ -96,7 +96,6 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
         from dataquality_spark.operators.dedup import suggest_salt_buckets
         salt_buckets = suggest_salt_buckets(
             pages, TX.content_hash(F.col("text")))
-    art = None if portable_models else get_artifacts()
     # html is never consumed downstream (rules/models/scrub all read `text`);
     # dropping it here keeps it out of the persisted frame and the shuffle.
     # Column pruning would skip it at scan time anyway (SURVEY.md §4.2).
@@ -105,10 +104,7 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
     # its row queue while batches round-trip to Python, so the Python node
     # must sit where rows are narrowest (measured 3× on the full frame).
     # langid+perplexity+scrub are FUSED into one UDF so `text` crosses the
-    # JVM↔Python boundary once (measured 11.4s→9.8s at sf0.1/local[32]).
-    # Optional learned-quality stage (with_classifier): the classifier rides
-    # the SAME fused UDF crossing as one more struct field — no extra Python
-    # runner, no extra Arrow transfer of `text`.
+    # JVM↔Python boundary once (models/udf.py::with_model_stage).
     if portable_models:
         # ENGINE-PORTABLE stage B (fixed-point integer rules — the
         # SQL-replayable mode the exact pipeline-metrics oracle runs;
@@ -116,17 +112,19 @@ def run_pipeline(spark: SparkSession, pages: DataFrame,
         # needing the graded lang_conf/logprob floats use the default.
         assert not with_classifier and not lang_optional, \
             "portable_models composes with the default stage options only"
-    q_art = None
-    if with_classifier:
-        from dataquality_spark.models import quality
-        q_art = quality.train_quality()
-    if portable_models:
-        from dataquality_spark.models.udf import with_portable_scores_and_scrub
-        df = with_portable_scores_and_scrub(spark, df)
+        scorer = portable_scorer()
     else:
-        df = with_model_scores_and_scrub(spark, df, art["langid"], art["lm"],
-                                         quality_art=q_art,
-                                         lang_optional=lang_optional)
+        # Optional learned-quality stage (with_classifier): the classifier
+        # rides the SAME fused UDF crossing as one more struct field — no
+        # extra Python runner, no extra Arrow transfer of `text`.
+        q_art = None
+        if with_classifier:
+            from dataquality_spark.models import quality
+            q_art = quality.train_quality()
+        art = get_artifacts()
+        scorer = float_scorer(art["langid"], art["lm"], quality_art=q_art,
+                              lang_optional=lang_optional)
+    df = with_model_stage(spark, df, scorer)
     # the fused UDF already emitted the fixed-ASCII-class counts — the
     # rules projection only runs the Unicode-table-sensitive stats
     # (alpha \p{L}, stopword lower()) in the JVM (functions/stats_batch)

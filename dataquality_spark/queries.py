@@ -3440,8 +3440,9 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compared value is the integer decision numerator Σwq[bucket] + bq·n_feat
 # — exact in any summation order on both engines, no float knife edge
 # (the `_sql_fuzzy_dedup` constants-from-the-operator pattern). The
-# graded-probability surface (crc spec, `make_quality_udf`) stays the
-# pipeline's scoring path; this query pins the decision algebra.
+# graded-probability surface (crc spec, `q_prob` in the fused model stage,
+# models/udf.py::float_scorer) stays the pipeline's scoring path; this
+# query pins the decision algebra.
 
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataquality_spark.models import quality

@@ -7,7 +7,8 @@ from pyspark.sql import functions as F
 
 from dataquality_spark import spec
 from dataquality_spark.models import corpus, langid, ngram_lm
-from dataquality_spark.models.udf import score_batch, with_model_scores
+from dataquality_spark.models.udf import (float_scorer, score_batch,
+                                          with_model_stage)
 
 
 def test_langid_accuracy_on_seed_corpus(artifacts):
@@ -44,7 +45,8 @@ def test_perplexity_separates_gibberish(artifacts):
 
 
 def test_model_udf_matches_local(spark, artifacts):
-    """Spark UDF output == driver-side score_batch (plumbing parity)."""
+    """Fused float model stage == driver-side score_batch (plumbing
+    parity)."""
     texts = (corpus.seed_corpus("en", 10) + corpus.seed_corpus("fr", 10)
              + [None, "", "zzz qqq xxx " * 40])
     pdf = pd.DataFrame({
@@ -53,7 +55,8 @@ def test_model_udf_matches_local(spark, artifacts):
         "lang": ["en"] * len(texts),
     })
     sdf = spark.createDataFrame(pdf)
-    out = with_model_scores(spark, sdf, artifacts["langid"], artifacts["lm"])
+    out = with_model_stage(
+        spark, sdf, float_scorer(artifacts["langid"], artifacts["lm"]))
     got = out.select("url", "pred_lang", "lang_conf", "logprob",
                      "r_perplexity").toPandas().set_index("url").sort_index()
     ref = score_batch(pdf["text"], artifacts["langid"], artifacts["lm"])
@@ -98,20 +101,22 @@ def test_quality_training_deterministic(artifacts_q):
     assert artifacts_q["b"] == art2["b"]
 
 
-def test_quality_udf_parity_and_nulls(spark, artifacts_q):
-    """The Arrow UDF must equal predict_batch through the full Spark
-    plumbing (broadcast, batching, nulls); empty/null text scores 0.0."""
+def test_quality_udf_parity_and_nulls(spark, artifacts, artifacts_q):
+    """q_prob from the fused float model stage must equal predict_batch
+    through the full Spark plumbing (broadcast, batching, nulls);
+    empty/null text scores 0.0."""
     import pandas as pd
     from pyspark.sql import functions as F
     from dataquality_spark.models import quality
 
     texts = ["the quick brown fox and the lazy dog run home again",
              "", None, "xqzjvk wpfmtr zzkkqq " * 10]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "i: long, text: string")
-    udf = quality.make_quality_udf(spark, artifacts_q)
-    got = (df.select("i", udf("text").alias("p")).toPandas()
-           .sort_values("i")["p"].to_numpy())
+    df = spark.createDataFrame([(i, t, "en") for i, t in enumerate(texts)],
+                               "i: long, text: string, lang: string")
+    scorer = float_scorer(artifacts["langid"], artifacts["lm"],
+                          quality_art=artifacts_q)
+    got = (with_model_stage(spark, df, scorer).select("i", "q_prob")
+           .toPandas().sort_values("i")["q_prob"].to_numpy())
     want = quality.predict_batch(pd.Series(texts), artifacts_q)
     assert abs(got - want).max() < 1e-12
     assert got[1] == 0.0 and got[2] == 0.0

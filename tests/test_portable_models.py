@@ -12,7 +12,6 @@ import re
 from contextlib import redirect_stdout
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from dataquality_spark import spec
@@ -33,15 +32,15 @@ def test_portable_langid_seed_accuracy():
     art = L.get_portable_langid()
     for li, lg in enumerate(spec.LANGS):
         docs = corpus.seed_corpus(lg, n_docs=50)
-        pred, margin = L.predict_portable_batch(pd.Series(docs), art)
+        pred, margin, _ = L.portable_scores_batch(docs, art)
         assert (pred == li).all(), lg
         assert (margin > 0).all(), lg
 
 
 def test_portable_langid_degenerate_rows():
     art = L.get_portable_langid()
-    pred, margin = L.predict_portable_batch(
-        pd.Series([None, "", "a", float("nan")]), art)
+    pred, margin, _ = L.portable_scores_batch(
+        [None, "", "a", float("nan")], art)
     assert pred.tolist() == [-1, -1, -1, -1]
     assert margin.tolist() == [0, 0, 0, 0]
 
@@ -51,9 +50,9 @@ def test_portable_langid_prefix_budget():
     mirror substrings to the same budget)."""
     art = L.get_portable_langid()
     base = "der die das und " * 64          # > 256 chars
-    p1, m1 = L.predict_portable_batch(pd.Series([base]), art)
-    p2, m2 = L.predict_portable_batch(
-        pd.Series([base[:L.L_MAX_CHARS] + "xyz appended garbage"]), art)
+    p1, m1, _ = L.portable_scores_batch([base], art)
+    p2, m2, _ = L.portable_scores_batch(
+        [base[:L.L_MAX_CHARS] + "xyz appended garbage"], art)
     assert p1[0] == p2[0] and m1[0] == m2[0]
 
 
@@ -91,11 +90,14 @@ def test_portable_lm_rejects_junk():
 
 def test_portable_pipeline_fused_single_arrow_stage(spark):
     """portable_models=True keeps the one-UDF stage-B contract and
-    produces the same 11-rule metrics schema."""
+    produces the same 11-rule metrics schema. Every model-stage mode
+    (float, float + classifier, portable) plans exactly ONE Python runner:
+    the persisted scored frame feeds both dedup consumers."""
     from dataquality_spark import pipeline as P
     from dataquality_spark.synth import generate_pages
     pages = generate_pages(spark, 400, seed=7)
-    ann = P.run_pipeline(spark, pages, persist=False, portable_models=True)
+    cleanup = []
+    ann = P.run_pipeline(spark, pages, cleanup=cleanup, portable_models=True)
 
     def arrow_count(frame):
         buf = io.StringIO()
@@ -104,10 +106,14 @@ def test_portable_pipeline_fused_single_arrow_stage(spark):
         return len(set(re.findall(r"\((\d+)\) ArrowEvalPython",
                                   buf.getvalue())))
 
-    base = P.run_pipeline(spark, pages, persist=False)
+    base = P.run_pipeline(spark, pages, cleanup=cleanup)
+    clf = P.run_pipeline(spark, pages, cleanup=cleanup, with_classifier=True)
     assert arrow_count(ann) == arrow_count(base)
+    assert [arrow_count(f) for f in (base, clf, ann)] == [1, 1, 1]
 
     m = P.pipeline_metrics(ann).collect()
+    for f in cleanup:
+        f.unpersist()
     assert len(m) == 11
     assert {r["rule_id"] for r in m} == set(P.PIPELINE_RULES)
     for r in m:

@@ -15,6 +15,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from dataquality_spark import spec
 from dataquality_spark.functions import text as TX
 from dataquality_spark.functions.stats_batch import stats_batch
 from dataquality_spark.rules.heuristics import STAT_COLS, with_text_stats
@@ -63,6 +64,9 @@ def _jvm_counts(spark, texts):
 def _assert_counts_match(spark, texts):
     want = _jvm_counts(spark, texts)
     got = stats_batch(pd.Series(texts, dtype=object))
+    # one stop_cnts column per language, hits or not: the Arrow array
+    # width must not vary between batches
+    assert got["stop_cnts"].shape == (len(texts), len(spec.LANGS))
     for i, t in enumerate(texts):
         for col in ("word_cnt", "nonws_len", "symbol_cnt",
                     "nb_lines", "nb_distinct"):
@@ -72,6 +76,7 @@ def _assert_counts_match(spark, texts):
 
 def test_counts_match_jvm_hostile(spark):
     _assert_counts_match(spark, HOSTILE)
+    _assert_counts_match(spark, ["xyzzy plugh", None, "", "qqq"])  # no hits
 
 
 @settings(max_examples=4, deadline=None)
@@ -96,7 +101,6 @@ GATED_HOSTILE = [
 def test_gated_stats_match_jvm_on_fast_rows(spark, extra):
     """letterless / stop_cnts: on gate-admitted rows the kernel equals the
     JVM regex forms for EVERY language; on rejected rows it emits NULL."""
-    from dataquality_spark import spec
     texts = GATED_HOSTILE + extra
     from dataquality_spark.models.udf import _emit_stats
     pdf = _emit_stats(pd.DataFrame({"id": range(len(texts)),
